@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.etl.Cleaning
 
-import scala.util.Random
-
 /** Gold stage: bootstrap confidence-interval estimation.
   * Mirrors python-service/scripts/monte_carlo.py:237-285: first `maxColumns`
   * numeric columns in schema order, median-filled, ≥21 non-null values,
@@ -126,8 +124,9 @@ object Bootstrap {
 
   /** Exact multinomial bootstrap on collected columns (reference-scale
     * path). Columns resample in parallel driver threads with a per-column
-    * SplitMix64 stream (deterministic regardless of scheduling); the inner
-    * loop is branch-free — ~1ns/draw, so 5000×100k×8 finishes in seconds.
+    * SplitMix64 stream over the sorted column (deterministic regardless of
+    * scheduling and of read order); the inner loop is branch-free —
+    * ~1ns/draw, so 5000×100k×8 finishes in seconds.
     */
   def driverSide(
       spark: SparkSession,
@@ -146,6 +145,10 @@ object Bootstrap {
           .filter(col(c).isNotNull)
           .collect()
           .map(_.getDouble(0))
+        // resample the SORTED column: the draws index into it, so the
+        // result is a function of the multiset of values, not of the
+        // order the partitions were read back in
+        java.util.Arrays.sort(values)
         if (values.length <= 20) None // monte_carlo.py:271
         else {
           var state = seed + 0x9E3779B97F4A7C15L * (ci + 1)
@@ -554,14 +557,6 @@ object Bootstrap {
       if (wts(ci).forall(_ <= 20)) None else Some(statsRow(c, means, nSim))
     }
     toDF(spark, rows)
-  }
-
-  private def poissonDraw(rng: Random): Int = {
-    // Knuth, λ=1: L = e^-1
-    val L = 0.36787944117144233
-    var k = 0; var p = 1.0
-    while ({ p *= rng.nextDouble(); p > L }) k += 1
-    k
   }
 
   private def statsRow(name: String, means: Array[Double], nSim: Int): Row = {

@@ -377,7 +377,9 @@ object LakeOps {
     *
     * Why targeted: the r1-r7 blanket form salted EVERY big row and
     * replicated the ENTIRE other side ×salts — at 100 TB that ×salts
-    * probe-side shuffle is the scale-killer (r7's dominant sweep line).
+    * probe-side shuffle is the scale-killer (r7's dominant sweep line;
+    * SALTEDJOIN_r08.json measured both forms at 100×: blanket 6.91 GB
+    * shuffle-write vs targeted 1.94 GB, the same as the plain join).
     * Here the replication cost is `salts × |other ∩ hot|` rows — bounded
     * by `maxHotKeys`, not by the table. The profile pass costs one narrow
     * partial-aggregated scan of the key column; pass `hotKeys` explicitly
@@ -419,28 +421,6 @@ object LakeOps {
     val coldJoined =
       big.filter(!isHot).join(other.filter(!isHot), Seq(key), joinType)
     hotJoined.unionByName(coldJoined)
-  }
-
-  /** The r1-r7 BLANKET form — every big row salted, the whole other side
-    * replicated ×salts. Kept private as the measurement twin for
-    * [[saltedJoin]]'s targeted rewrite (SaltedJoinProbe records both
-    * forms' shuffle-write bytes side by side) and for specs that pin the
-    * targeted form's ~×salts shuffle saving.
-    */
-  private[graft] def saltedJoinAll(
-      big: DataFrame,
-      other: DataFrame,
-      key: String,
-      rowIdCols: Seq[String],
-      salts: Int = 8,
-      joinType: String = "inner"
-  ): DataFrame = {
-    require(salts >= 1)
-    val saltExpr = pmod(xxhash64(rowIdCols.map(col): _*), lit(salts.toLong))
-    val b = big.withColumn("_salt", saltExpr)
-    val o = other.withColumn("_salt",
-      explode(sequence(lit(0L), lit(salts - 1L))))
-    b.join(o, Seq(key, "_salt"), joinType).drop("_salt")
   }
 
   // ------------------------------------------------- skew diagnostics

@@ -3,8 +3,8 @@ package graft.tools
 import graft.GraftSession
 import graft.io.Layers
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
@@ -28,35 +28,27 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.tools.LakeLayoutProbe [dir100] [outJson]
   */
-object LakeLayoutProbe {
-
-  private def collectPlan(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: collectPlan(a.executedPlan)
-    case q: QueryStageExec => q +: collectPlan(q.plan)
-    case o => o +: o.children.flatMap(collectPlan)
-  }
+object LakeLayoutProbe extends AdaptiveSparkPlanHelper {
 
   private def numFilesRead(df: DataFrame): Long =
-    collectPlan(df.queryExecution.executedPlan)
-      .collect { case f: FileSourceScanExec => f.metrics("numFiles").value }
-      .sum
+    collect(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec => f.metrics("numFiles").value }.sum
 
   /** Bytes of the files selected by the scan (post partition pruning) —
     * the pruning readout that stays meaningful even when the unpruned
     * source is a single file.
     */
   private def bytesScanned(df: DataFrame): Long =
-    collectPlan(df.queryExecution.executedPlan)
-      .collect { case f: FileSourceScanExec => f.metrics("filesSize").value }
-      .sum
+    collect(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec => f.metrics("filesSize").value }.sum
 
   private def exchanges(df: DataFrame): Int =
-    collectPlan(df.queryExecution.executedPlan)
-      .count(_.isInstanceOf[ShuffleExchangeExec])
+    collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e }.size
 
   private def sorts(df: DataFrame): Int =
-    collectPlan(df.queryExecution.executedPlan)
-      .count(_.isInstanceOf[org.apache.spark.sql.execution.SortExec])
+    collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.SortExec => s }.size
 
   /** Time via collect(): every probe query aggregates to ≤ a handful of
     * rows, and collect executes THIS DataFrame's QueryExecution — the
@@ -244,9 +236,8 @@ object LakeLayoutProbe {
       .select((col("l_partkey") % 65536).as("a"),
         (col("l_suppkey") % 65536).as("b"))
     def scanRows(df: DataFrame): Long =
-      collectPlan(df.queryExecution.executedPlan)
-        .collect { case fs: FileSourceScanExec =>
-          fs.metrics("numOutputRows").value }.sum
+      collect(df.queryExecution.executedPlan) {
+        case fs: FileSourceScanExec => fs.metrics("numOutputRows").value }.sum
     val curveLayouts = Seq[(String, DataFrame => DataFrame)](
       ("linear", d => d.repartitionByRange(64, col("a"))
         .sortWithinPartitions("a")),

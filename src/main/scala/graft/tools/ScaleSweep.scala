@@ -422,36 +422,10 @@ object ScaleSweep {
     val slowest = (r100.sortBy(-_._2).take(8).map(_._1) ++
       r100.filter(_._2 >= isoFloorSec).map(_._1) ++ alwaysIso).distinct
     val spark2 = GraftSession.quiet(GraftSession.local("scale-sweep-iso"))
-    // capture each executed plan so AQE decisions (skew-join split,
-    // partition coalesce) are RECORDED per adjudicated run, not guessed
-    @volatile var lastPlan = ""
-    val planSeq = new java.util.concurrent.atomic.AtomicLong(0)
-    spark2.listenerManager.register(
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = {
-          lastPlan = qe.executedPlan.toString
-          planSeq.incrementAndGet()
-          ()
-        }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = ()
-      })
-    // the listener bus is async and a fixed sleep can record the plan of
-    // the WARM pass under load — wait until the event stream quiesces
-    // (FIFO bus: once no event lands for a beat, lastPlan is the final
-    // executed query's plan), bounded at ~10 s
-    def drainPlans(): Unit = {
-      var prev = -1L
-      var spins = 0
-      while (spins < 40 && planSeq.get != prev) {
-        prev = planSeq.get
-        Thread.sleep(250)
-        spins += 1
-      }
-    }
+    // the ledger captures each executed plan so AQE decisions (skew-join
+    // split, partition coalesce) are RECORDED per adjudicated run, not
+    // guessed; reading it waits for the async listener bus to deliver
+    val planLedger = TaskMetricsLedger.install(spark2)
     val skewApplied = scala.collection.mutable.LinkedHashMap[String, Boolean]()
     val isoSpread = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
     val rIso = slowest.map { n =>
@@ -470,7 +444,7 @@ object ScaleSweep {
         System.gc()
         dt
       }
-      drainPlans()
+      val lastPlan = planLedger.executedPlan.fold("")(_.toString)
       if (lastPlan.contains("isSkewJoin=true")) skewApplied(n) = true
       else if (lastPlan.contains("SortMergeJoin") ||
         lastPlan.contains("ShuffledHashJoin")) skewApplied(n) = false
@@ -481,6 +455,7 @@ object ScaleSweep {
          else ""))
       n -> dt
     }
+    TaskMetricsLedger.uninstall(spark2, planLedger)
 
     // AQE-skew-on-real-data adjudication (r7 VERDICT #2): the events
     // event_type join is the genuinely skewed real profile — record

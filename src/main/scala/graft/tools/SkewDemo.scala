@@ -3,7 +3,7 @@ package graft.tools
 import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
@@ -33,25 +33,18 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.tools.SkewDemo [dir] [reps]
   */
-object SkewDemo {
-
-  private def collectPlan(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: collectPlan(a.executedPlan)
-    case q: QueryStageExec => q +: collectPlan(q.plan)
-    case o => o +: o.children.flatMap(collectPlan)
-  }
+object SkewDemo extends AdaptiveSparkPlanHelper {
 
   private def shuffleWriteBytes(p: SparkPlan): Long =
-    collectPlan(p)
-      .collect { case s: ShuffleExchangeExec => s.metrics("dataSize").value }
+    collect(p) { case s: ShuffleExchangeExec => s.metrics("dataSize").value }
       .sum
 
   private def skewApplied(p: SparkPlan): Boolean =
-    collectPlan(p).exists {
+    find(p) {
       case j: SortMergeJoinExec => j.isSkewJoin
       case j: ShuffledHashJoinExec => j.isSkewJoin
       case _ => false
-    }
+    }.isDefined
 
   final case class Readout(variant: String, minSec: Double, maxSec: Double,
       shuffleGb: Double, aqeSkew: Boolean, rowsHash: Long)
@@ -60,50 +53,35 @@ object SkewDemo {
     * plan's shuffle-write dataSize, skew-split flag, and an
     * order-independent result checksum proving all variants agree.
     *
-    * Metrics come from the EXECUTED QueryExecution captured by a listener
-    * — a noop write plans its own execution, so reading metrics off the
-    * original DataFrame's plan silently yields zeros (and an initial,
-    * never-final AQE tree).
+    * Metrics come from the EXECUTED plan the ledger captured — a noop
+    * write plans its own execution, so reading metrics off the original
+    * DataFrame's plan silently yields zeros (and an initial, never-final
+    * AQE tree).
     */
   private def measure(spark: SparkSession, label: String, reps: Int,
       mk: () => DataFrame): Readout = {
-    @volatile var lastPlan: SparkPlan = null
-    val seen = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = {
-        lastPlan = qe.executedPlan
-        seen.incrementAndGet()
-        ()
-      }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
+    val ledger = TaskMetricsLedger.install(spark)
     try {
       mk().write.format("noop").mode("overwrite").save() // warm
       System.gc()
       var bytes = 0L
       var skew = false
       val ts = (1 to reps).map { _ =>
-        val before = seen.get
+        ledger.reset()
         val t0 = System.nanoTime()
         mk().write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        // the listener bus is async — wait for this write's event
-        var spins = 0
-        while (seen.get == before && spins < 100) { Thread.sleep(100); spins += 1 }
-        bytes = shuffleWriteBytes(lastPlan)
-        skew = skewApplied(lastPlan)
+        ledger.executedPlan.foreach { p =>
+          bytes = shuffleWriteBytes(p)
+          skew = skewApplied(p)
+        }
         System.gc()
         dt
       }
       val h = mk().select(sum(pmod(xxhash64(col("event_type"), col("value"),
         col("priority")), lit(1000000000L))).cast("long")).head().getLong(0)
       Readout(label, ts.min, ts.max, bytes / 1e9, skew, h)
-    } finally spark.listenerManager.unregister(listener)
+    } finally TaskMetricsLedger.uninstall(spark, ledger)
   }
 
   /** The skewed join: every event against a 5-row type dim, materialized

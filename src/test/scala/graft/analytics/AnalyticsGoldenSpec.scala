@@ -84,6 +84,14 @@ class AnalyticsGoldenSpec extends SparkSpec {
     }
   }
 
+  test("bootstrap: result depends on the rows, not on the order they are " +
+    "read back in") {
+    val inOrder = Bootstrap(spark, merged).collect().toSeq
+    val shuffled = Bootstrap(spark, merged.repartition(7)).collect().toSeq
+    assert(inOrder.nonEmpty)
+    assert(inOrder == shuffled, s"$inOrder\nvs\n$shuffled")
+  }
+
   test("bootstrap: distributed Poisson path agrees with driver-side path") {
     val cols = Seq("vehicle_count", "humidity")
     val sub = merged.select(cols.map(col): _*)

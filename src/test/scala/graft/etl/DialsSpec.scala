@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** The r6 cluster dials (VERDICT r5 #8): options that were measured and
@@ -8,7 +9,7 @@ import org.apache.spark.sql.functions._
   * Each spec proves VALUE IDENTITY with the dial on vs off — flipping a
   * dial can change bytes-on-the-wire, never answers.
   */
-class DialsSpec extends SparkSpec {
+class DialsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("q04 per-key fact pre-aggregation: identical results either way") {
     val dir = sfDir("0.001")
@@ -25,14 +26,9 @@ class DialsSpec extends SparkSpec {
   test("q04 pre-aggregation dial: an extra aggregate appears below the " +
     "join, fact exchange rows shrink to one per order") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-    def aggs(p: SparkPlan): Seq[HashAggregateExec] = p match {
-      case a: AdaptiveSparkPlanExec => aggs(a.executedPlan)
-      case q: QueryStageExec => aggs(q.plan)
-      case h: HashAggregateExec => Seq(h) ++ h.children.flatMap(aggs)
-      case o => o.children.flatMap(aggs)
-    }
+    def aggs(p: SparkPlan): Seq[HashAggregateExec] =
+      collect(p) { case h: HashAggregateExec => h }
     val dir = sfDir("0.001")
     def nOrderKeyAggs(pre: Boolean): Int = {
       val df = graft.queries.CoreQueries.regionalRevenue(spark, dir, pre)

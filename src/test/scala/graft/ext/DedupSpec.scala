@@ -1,9 +1,10 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
-class DedupSpec extends SparkSpec {
+class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   // long-ish docs so simhash bit sums are stable; doc 2 differs from 0 by
   // a single token out of ~40
@@ -270,14 +271,9 @@ class DedupSpec extends SparkSpec {
   test("fuzzyLinkPairs: no exchange carries an UNVERIFIED candidate pair " +
     "(both strings only cross a shuffle alongside edit_distance)") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-      case q: QueryStageExec => shuffles(q.plan)
-      case s: ShuffleExchangeExec => Seq(s) ++ s.children.flatMap(shuffles)
-      case o => o.children.flatMap(shuffles)
-    }
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      collect(p) { case s: ShuffleExchangeExec => s }
     // ids LEAD the strings so prefix blocks stay diverse (a shared literal
     // prefix would make one quadratic block); broadcast is disabled so the
     // block joins actually plan their exchanges
@@ -306,14 +302,9 @@ class DedupSpec extends SparkSpec {
   test("fuzzyLinkPairs maxDist>=2: cross-pass dedup moves id pairs only " +
     "(no exchange carries both string payloads)") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-      case q: QueryStageExec => shuffles(q.plan)
-      case s: ShuffleExchangeExec => Seq(s) ++ s.children.flatMap(shuffles)
-      case o => o.children.flatMap(shuffles)
-    }
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      collect(p) { case s: ShuffleExchangeExec => s }
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

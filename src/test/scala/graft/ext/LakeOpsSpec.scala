@@ -2,8 +2,9 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
-class LakeOpsSpec extends SparkSpec {
+class LakeOpsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   // ------------------------------------------------------------ cdcMerge
@@ -52,14 +53,9 @@ class LakeOpsSpec extends SparkSpec {
   test("cdcMerge never shuffles the base's full width (feed broadcast, " +
     "anti join sees only the key column)") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-      case q: QueryStageExec => shuffles(q.plan)
-      case s: ShuffleExchangeExec => Seq(s) ++ s.children.flatMap(shuffles)
-      case o => o.children.flatMap(shuffles)
-    }
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      collect(p) { case s: ShuffleExchangeExec => s }
     val base = spark.range(0, 200000)
       .select(col("id").as("k"), concat(lit("payload_"), col("id")).as("v"))
     val changes = spark.range(0, 50)
@@ -223,14 +219,9 @@ class LakeOpsSpec extends SparkSpec {
 
   test("mixtureSample is a map-side filter over the corpus (rates broadcast)") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-      case q: QueryStageExec => shuffles(q.plan)
-      case s: ShuffleExchangeExec => Seq(s) ++ s.children.flatMap(shuffles)
-      case o => o.children.flatMap(shuffles)
-    }
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      collect(p) { case s: ShuffleExchangeExec => s }
     val docs = spark.range(0, 10000).select(
       (col("id") % 7).cast("string").as("g"), col("id").as("doc_id"),
       concat(lit("body_"), col("id")).as("text"))

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** The IVF-PQ batch k-NN channel (pqKnnJoin — the x205/x214 production
@@ -10,7 +11,7 @@ import org.apache.spark.sql.functions._
   * channel — including the exact-bucket LSH one — sits at the random
   * baseline; the pin must run where there is signal to recover).
   */
-class PqKnnSpec extends SparkSpec {
+class PqKnnSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** 400 vectors in 10 well-separated 64-dim clusters (block centers at
     * +5, seeded noise sigma 0.3): 1-NN label imputation must be ~perfect.
@@ -145,14 +146,9 @@ class PqKnnSpec extends SparkSpec {
   test("pqKnnJoin plan: no exchange carries a vector column — only cell " +
     "ids and PQ codes shuffle (the 64x shuffle-byte claim)") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-      case q: QueryStageExec => shuffles(q.plan)
-      case s: ShuffleExchangeExec => Seq(s) ++ s.children.flatMap(shuffles)
-      case o => o.children.flatMap(shuffles)
-    }
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      collect(p) { case s: ShuffleExchangeExec => s }
     val nn = Similarity.pqKnnJoin(clustered, clustered, "vec_id", "embedding",
       k = 1, centroids, codebooks, nProbe = 2)
     nn.write.format("noop").mode("overwrite").save()
@@ -166,12 +162,7 @@ class PqKnnSpec extends SparkSpec {
   test("pqKnnJoin k>1 plans as a codegen HashAggregate — no window sort, " +
     "no ObjectHashAggregate fallback") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => Seq(q) ++ nodes(q.plan)
-      case o => Seq(o) ++ o.children.flatMap(nodes)
-    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = collect(p) { case n => n }
     // k = 32 crosses the old 16-slot cap (VERDICT r5 #3): the widened
     // TopKLongs must keep the HashAggregate plan there too
     Seq(5, 32).foreach { k =>

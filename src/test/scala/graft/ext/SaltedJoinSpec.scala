@@ -2,12 +2,11 @@ package graft.ext
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
-class SaltedJoinSpec extends SparkSpec {
+class SaltedJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val big = Seq(
@@ -18,15 +17,8 @@ class SaltedJoinSpec extends SparkSpec {
   private val dim = Seq((1L, "one"), (2L, "two"), (4L, "four"))
     .toDF("k", "name")
 
-  private def collectPlan(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: collectPlan(a.executedPlan)
-    case q: QueryStageExec => q +: collectPlan(q.plan)
-    case o => o +: o.children.flatMap(collectPlan)
-  }
-
   private def joinsOf(df: DataFrame): Seq[BaseJoinExec] =
-    collectPlan(df.queryExecution.executedPlan)
-      .collect { case j: BaseJoinExec => j }
+    collect(df.queryExecution.executedPlan) { case j: BaseJoinExec => j }
 
   test("saltedJoin: row-for-row identical to the plain join (inner + left, " +
     "explicit hot keys, null big key routed to the cold span)") {

@@ -2,8 +2,7 @@ package graft.ext
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
@@ -23,26 +22,18 @@ import org.apache.spark.sql.functions._
   *    same-key shuffle CONSUMER above the join (AQE refuses to split a
   *    partition another operator requires co-partitioned).
   */
-class SkewJoinCompareSpec extends SparkSpec {
-
-  private def collectPlan(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: collectPlan(a.executedPlan)
-    case q: QueryStageExec => q +: collectPlan(q.plan)
-    case o => o +: o.children.flatMap(collectPlan)
-  }
+class SkewJoinCompareSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def shuffleWriteBytes(df: DataFrame): Long =
-    collectPlan(df.queryExecution.executedPlan)
-      .collect { case s: ShuffleExchangeExec => s.metrics("dataSize").value }
-      .sum
+    collect(df.queryExecution.executedPlan) {
+      case s: ShuffleExchangeExec => s.metrics("dataSize").value }.sum
 
   private def hasSkewSplitJoin(df: DataFrame): Boolean =
-    collectPlan(df.queryExecution.executedPlan)
-      .exists {
-        case j: SortMergeJoinExec => j.isSkewJoin
-        case j: ShuffledHashJoinExec => j.isSkewJoin
-        case _ => false
-      }
+    find(df.queryExecution.executedPlan) {
+      case j: SortMergeJoinExec => j.isSkewJoin
+      case j: ShuffledHashJoinExec => j.isSkewJoin
+      case _ => false
+    }.isDefined
 
   // 2M rows, half of them on key 0 (hot reducer ≈ 32× the mean), dim of
   // 10k keys — the profile keyProfile (q106) flags for mitigation

@@ -2,8 +2,8 @@ package graft.plans
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{ExpandExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.ExpandExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** The injected SplitDistinctAggregates rule (the q201 Expand-trap fix
@@ -11,19 +11,12 @@ import org.apache.spark.sql.functions._
   * cross-joined branches; everything outside the conservative scope is
   * left to Spark's RewriteDistinctAggregates.
   */
-class SplitDistinctAggregatesSpec extends SparkSpec {
+class SplitDistinctAggregatesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
-
-  private def expands(p: SparkPlan): Seq[ExpandExec] = p match {
-    case a: AdaptiveSparkPlanExec => expands(a.executedPlan)
-    case q: QueryStageExec => expands(q.plan)
-    case e: ExpandExec => Seq(e) ++ e.children.flatMap(expands)
-    case o => o.children.flatMap(expands)
-  }
 
   private def hasExpand(df: DataFrame): Boolean = {
     df.write.format("noop").mode("overwrite").save()
-    expands(df.queryExecution.executedPlan).nonEmpty
+    find(df.queryExecution.executedPlan)(_.isInstanceOf[ExpandExec]).isDefined
   }
 
   private lazy val base = Seq(
@@ -60,11 +53,6 @@ class SplitDistinctAggregatesSpec extends SparkSpec {
     // re-decompress the wide column (the measured r6 loss case)
     assert(hasExpand(base.groupBy("k")
       .agg(count_distinct(col("s")), count_distinct(col("v")))))
-    // ...and `false` disables grouped splitting even for all-numeric sets
-    spark.conf.set("spark.graft.splitDistinctAggregates.grouped", "false")
-    try assert(hasExpand(base.groupBy("s")
-      .agg(count_distinct(col("k")), count_distinct(col("v")))))
-    finally spark.conf.unset("spark.graft.splitDistinctAggregates.grouped")
   }
 
   test("grouped AUTO default: all-fixed-width distinct sets split without " +
@@ -104,12 +92,12 @@ class SplitDistinctAggregatesSpec extends SparkSpec {
 
   test("grouped multi-distinct splits: no Expand, per-group values exact, " +
     "null keys survive the reassembly join") {
+    // fixed-width distinct inputs (`s` is an integer code here), so the
+    // auto gate splits
     val withNullKey = Seq(
-      (Option(1L), "x", 10.0), (Option(1L), "y", 20.0), (None, "x", 30.0),
-      (None, "z", 40.0), (Option(2L), "x", 50.0), (Option(2L), "x", 60.0)
+      (Option(1L), 1, 10.0), (Option(1L), 2, 20.0), (None, 1, 30.0),
+      (None, 3, 40.0), (Option(2L), 1, 50.0), (Option(2L), 1, 60.0)
     ).toDF("k", "s", "v")
-    spark.conf.set("spark.graft.splitDistinctAggregates.grouped", "true")
-    try {
     val df = withNullKey.groupBy("k").agg(
       count_distinct(col("s")).as("ds"),
       count_distinct(col("v")).as("dv"),
@@ -127,8 +115,6 @@ class SplitDistinctAggregatesSpec extends SparkSpec {
       .select("ds", "dv")
     assert(noKey.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
       .toSeq == Seq((1L, 2L), (2L, 2L), (2L, 2L)))
-    } finally
-      spark.conf.unset("spark.graft.splitDistinctAggregates.grouped")
   }
 
   test("single distinct set and non-deterministic children are untouched") {

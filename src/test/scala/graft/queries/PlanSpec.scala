@@ -6,13 +6,14 @@ import graft.io.Layers
 import graft.schema.Schemas
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** Physical-plan audits: the properties that make these queries scale are
   * asserted, not assumed — filter pushdown to the scan, column pruning,
   * broadcast joins for dims, whole-stage codegen, and (for the pair
   * operators) the expensive predicate staying OUT of the join condition.
   */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
@@ -108,14 +109,9 @@ class PlanSpec extends SparkSpec {
 
   test("IVF: persisted-index probe prunes to nProbe partitions at the source") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import graft.ext.Similarity
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case o => o.children.flatMap(scans)
-    }
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] =
+      collect(p) { case f: FileSourceScanExec => f }
     val tmp = java.nio.file.Files.createTempDirectory("ivf").toString + "/idx"
     val emb = Q.t(spark, sfDir("0.001"), "embeddings")
     val idx = Similarity.ivfIndex(emb, "embedding", kClusters = 8)
@@ -134,14 +130,9 @@ class PlanSpec extends SparkSpec {
   test("IVF-PQ: persisted-index probe prunes to nProbe partitions AND " +
     "serves from codes only (no vector column in the scan)") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import graft.ext.Similarity
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case o => o.children.flatMap(scans)
-    }
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] =
+      collect(p) { case f: FileSourceScanExec => f }
     val tmp = java.nio.file.Files.createTempDirectory("ivfpq").toString + "/idx"
     val emb = Q.t(spark, sfDir("0.001"), "embeddings")
     val idx = Similarity.ivfIndex(emb, "embedding", kClusters = 8)
@@ -172,13 +163,8 @@ class PlanSpec extends SparkSpec {
     import graft.ext.Dedup
     val docs = Q.t(spark, sfDir("0.001"), "documents")
     val sigs = Dedup.minHashSignatures(docs, "doc_id", "text")
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-      case q: QueryStageExec => shuffles(q.plan)
-      case s: ShuffleExchangeExec => Seq(s) ++ s.children.flatMap(shuffles)
-      case o => o.children.flatMap(shuffles)
-    }
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      collect(p) { case s: ShuffleExchangeExec => s }
     val ex = shuffles(sigs.queryExecution.executedPlan)
     // exactly one narrow rebalance of the raw (id, text) rows — the
     // parallelism guard for single-file inputs; the exploded/hashed grams
@@ -195,17 +181,12 @@ class PlanSpec extends SparkSpec {
 
   test("bucketed lake layout: dedup window and key join run with ZERO exchange") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, row_number}
     import graft.ext.Dedup
-    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-      case q: QueryStageExec => shuffles(q.plan)
-      case s: ShuffleExchangeExec => Seq(s) ++ s.children.flatMap(shuffles)
-      case o => o.children.flatMap(shuffles)
-    }
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      collect(p) { case s: ShuffleExchangeExec => s }
     val docs = Q.t(spark, sfDir("0.001"), "documents")
       .withColumn("content_hash", Dedup.contentHash(Seq("text")))
     Layers.writeBucketed(docs, "graft_docs_by_hash", Seq("content_hash"),
@@ -250,13 +231,8 @@ class PlanSpec extends SparkSpec {
     // (Walk the FINAL adaptive plan: FormattedMode's footer + initial-plan
     // sections render every scan node more than once.)
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scans(pl: SparkPlan): Seq[FileSourceScanExec] = pl match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case qs: QueryStageExec => scans(qs.plan)
-      case s: FileSourceScanExec => Seq(s)
-      case o => o.children.flatMap(scans)
-    }
+    def scans(pl: SparkPlan): Seq[FileSourceScanExec] =
+      collect(pl) { case s: FileSourceScanExec => s }
     val n = scans(df.queryExecution.executedPlan).length
     assert(n <= 2, s"expected <=2 parquet scans (query + corpus), got $n:\n$p")
     assert(p.contains("Generate") && p.contains("explode"),
@@ -320,15 +296,10 @@ class PlanSpec extends SparkSpec {
 
   test("q171/q172 substring dedup: window STRINGS never cross an exchange") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types.StringType
-    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-      case qs: QueryStageExec => shuffles(qs.plan)
-      case s: ShuffleExchangeExec => Seq(s) ++ s.children.flatMap(shuffles)
-      case o => o.children.flatMap(shuffles)
-    }
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      collect(p) { case s: ShuffleExchangeExec => s }
     for (name <- Seq("q171_substring_dup_spans", "q172_winnowed_candidates")) {
       val df = q(name)
       val ex = shuffles(df.queryExecution.executedPlan)

@@ -1,6 +1,9 @@
 package graft.tools
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.col
 
 /** Per-family shuffle-byte budgets enforced in CI (VERDICT r9 #1): the
   * 100-TB claims are per-op byte SHAPES — "long-only shuffles", "pair
@@ -18,7 +21,7 @@ import graft.SparkSpec
   * 100× — sf0.01 ratios UNDERSHOOT, which is why ScaleSweep enforces the
   * same table at the 100× point too.)
   */
-class ShuffleBudgetSpec extends SparkSpec {
+class ShuffleBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val dir = sfDir("0.01")
 
@@ -59,6 +62,29 @@ class ShuffleBudgetSpec extends SparkSpec {
       }
       assert(failures.isEmpty,
         "shuffle budgets exceeded:\n" + failures.mkString("\n"))
+    } finally TaskMetricsLedger.uninstall(spark, ledger)
+  }
+
+  test("ledger counts a groupBy's jobs, stages, tasks and shuffle bytes, " +
+    "captures its executed plan, and resets to zero") {
+    val ledger = TaskMetricsLedger.install(spark)
+    try {
+      ledger.reset()
+      spark.range(0, 10000).groupBy((col("id") % 10).as("g")).count()
+        .write.format("noop").mode("overwrite").save()
+      val s = ledger.snapshot()
+      assert(s.jobs >= 1, s.json)
+      assert(s.stages >= 2, s.json)
+      assert(s.tasks > 0, s.json)
+      assert(s.shuffleWriteBytes > 0, s.json)
+      val plan = ledger.executedPlan
+      assert(plan.exists(p =>
+        find(p)(_.isInstanceOf[ShuffleExchangeExec]).isDefined),
+        s"no ShuffleExchangeExec in the captured plan: $plan")
+      ledger.reset()
+      val z = ledger.snapshot()
+      assert(z == TaskMetricsLedger.Snapshot(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0),
+        z.json)
     } finally TaskMetricsLedger.uninstall(spark, ledger)
   }
 }
